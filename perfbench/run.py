@@ -16,9 +16,10 @@ run on):
 - ``catalog_mix``: reference-surface catalog queries over the seed-42
   star tables at sf0.1 (``tables.py``), each written to the noop sink. One
   operation is one query; the client issues seeded permutations of
-  ``CATALOG_MIX`` in whole rounds, after a warm pass that runs each query
-  once. Traced runs then also time the operators layer through the eager
-  ``cp1_curated_corpus`` chain and its registered component queries.
+  ``CATALOG_MIX`` in whole rounds, after a checked pass and ``WARM_ROUNDS``
+  untimed rounds that warm the JIT. Traced runs then also time the
+  operators layer through the eager ``cp1_curated_corpus`` chain and its
+  registered component queries.
 
 Each workload runs operations until ``--seconds`` have passed: at least one
 batch, or at least ``MIN_ROUNDS`` rounds. Outputs are checked on every run:
@@ -76,7 +77,8 @@ CATALOG_MIX = [
     "mj1_shipping_priority",
     "ro1_hourly_rollup",
 ]
-MIN_ROUNDS = 2
+MIN_ROUNDS = 4
+WARM_ROUNDS = 3
 CURATE_QUERY = "cp1_curated_corpus"
 CURATE_COMPONENTS = {
     "cm1": "cm1_corpus_manifest",
@@ -88,7 +90,7 @@ CURATE_COMPONENTS = {
 
 END_TO_END = {
     "setup_s": "s",
-    "op_p50_ms": "ms",
+    "op_geomean_ms": "ms",
 }
 _SPARK = ("jobs", "stages", "tasks", "shuffle_write_bytes", "spill_bytes")
 PER_LAYER = {
@@ -122,7 +124,7 @@ PER_LAYER = {
     **{f"curate.{k}": "bytes" if k.endswith("bytes") else "count" for k in _SPARK},
     "curate.pinned_bytes": "bytes",
     "trace.overhead_s": "s",
-    "trace.op_p50_ms": "ms",
+    "trace.op_geomean_ms": "ms",
 }
 
 
@@ -140,6 +142,14 @@ def _percentile(values: list[float], q: int) -> float:
     if len(values) == 1:
         return values[0]
     return statistics.quantiles(values, n=100, method="inclusive")[q - 1]
+
+
+def _geomean_of_medians(by_kind: dict[str, list[float]]) -> float:
+    """Geometric mean over operation kinds of each kind's median latency.
+    Every kind weighs the same whatever its latency, so a mix of sub-second
+    and multi-second queries has no gap for the figure to jump across, as
+    the median of the pooled samples has."""
+    return statistics.geometric_mean([statistics.median(v) for v in by_kind.values()])
 
 
 def _file_digest(path: str) -> str:
@@ -165,6 +175,7 @@ class Run:
         self.setup_s = None
         self.deadline = None
         self.samples_ms: list[float] = []  # successful timed operations
+        self.kind_ms: dict[str, list[float]] = {}  # the same, by operation
         self.failed_ms: list[float] = []
         self.attempted = 0
         self.failed = 0
@@ -223,6 +234,7 @@ class Run:
         ms = (time.perf_counter() - t0) * 1000
         if timed:
             self.samples_ms.append(ms)
+            self.kind_ms.setdefault(what, []).append(ms)
         _log(f"op {what}: {ms:.0f} ms")
         return True, ms, result
 
@@ -566,12 +578,19 @@ def catalog_mix(run: Run) -> None:
     if eager:
         raise BenchError(f"catalog_mix expects lazy queries; {eager} are eager")
     sf_dir = _tables_dir(CATALOG_SF)
-    # warm pass: every query once, its output checked against the oracle
+    # warm pass: every query once, its output checked against the oracle,
+    # then untimed rounds through the noop sink: latencies fall for about
+    # ten rounds while the JIT compiles, steepest in the first three
     for name in CATALOG_MIX:
         run.check(f"oracle {name}", lambda: _verify(run, sf_dir, name))
-    run.setup_done()
     rng = random.Random(run.args.seed)
-    per_query: dict[str, list[float]] = {}
+    for _ in range(WARM_ROUNDS):
+        order = CATALOG_MIX[:]
+        rng.shuffle(order)
+        for name in order:
+            fn = QUERIES[name].fn
+            run.operation(f"warm {name}", lambda: _noop(fn(run.spark, sf_dir)), timed=False)
+    run.setup_done()
     rounds = 0
     # at least MIN_ROUNDS: stopping on the clock alone would give a slow
     # (busy) host fewer, less warmed rounds and skew its median further
@@ -579,9 +598,7 @@ def catalog_mix(run: Run) -> None:
         order = CATALOG_MIX[:]
         rng.shuffle(order)
         for name in order:
-            ok, ms, _ = run.operation(name, lambda: _query(run, sf_dir, name))
-            if ok:
-                per_query.setdefault(name, []).append(ms)
+            run.operation(name, lambda: _query(run, sf_dir, name))
         rounds += 1
     if run.samples_ms:
         run.native["query_p50_ms"] = statistics.median(run.samples_ms)
@@ -593,7 +610,7 @@ def catalog_mix(run: Run) -> None:
         counts = run.spark_counts
         run.record("catalog.jobs_per_query", statistics.mean(c["jobs"] for c in counts))
         run.record("catalog.tasks_per_query", statistics.mean(c["tasks"] for c in counts))
-        for name, v in per_query.items():
+        for name, v in run.kind_ms.items():
             run.record(f"catalog.q.{name}_ms", statistics.median(v))
         curation_layers(run)
 
@@ -636,8 +653,11 @@ def curation_layers(run: Run) -> None:
         counts, digest = res
         digest_file = os.path.join(BUILD, "digests", f"{os.path.basename(sf_dir)}-cp1.txt")
         run.check("cp1 digest", lambda: _check_digest(digest_file, digest))
-        run.record("curate.construct_s", run.last_self_time("curate.construct"))
-        run.record("curate.write_s", run.last_self_time("curate.write"))
+        construct = run.last_self_time("curate.construct")
+        write = run.last_self_time("curate.write")
+        run.record("curate.construct_s", construct)
+        run.record("curate.write_s", write)
+        run.native["curate_s"] = construct + write
         run.record("curate.pinned_bytes", counts["pinned_bytes"])
         run.record_counts("curate", counts)
     for key, name in CURATE_COMPONENTS.items():
@@ -698,11 +718,15 @@ def _stop_session(spark) -> None:
             time.sleep(0.05)
 
 
-def _cpu_ticks() -> tuple[int, int]:
-    """(all, stolen) CPU ticks of the machine so far, from /proc/stat."""
+def _cpu_ticks() -> tuple[int, int, float]:
+    """(all, stolen) CPU ticks of the machine so far, from /proc/stat, and
+    the ticks everything else on it was busy: all ticks not idle, waiting
+    for I/O or stolen, less this process and its waited-for descendants."""
     with open("/proc/stat") as fh:
         fields = [int(x) for x in fh.readline().split()[1:]]
-    return sum(fields), fields[7] if len(fields) > 7 else 0
+    busy = sum(fields) - sum(fields[3:5]) - sum(fields[7:8])
+    own = sum(os.times()[:4]) * os.sysconf("SC_CLK_TCK")
+    return sum(fields), fields[7] if len(fields) > 7 else 0, busy - own
 
 
 def _versions(spark) -> dict:
@@ -780,6 +804,7 @@ def bench(args) -> int:
     # one, the percentiles fall back to the failed attempts' times
     lat = run.samples_ms or run.failed_ms or [0.0]
     p50, p90 = statistics.median(lat), _percentile(lat, 90)
+    geomean = _geomean_of_medians(run.kind_ms or {"failed": lat})
     report = {
         "workload": args.workload,
         "seed": args.seed,
@@ -792,11 +817,15 @@ def bench(args) -> int:
         # share of the machine's CPU time the hypervisor gave to other
         # guests during the run: latencies stretch with it
         "steal_share": (ticks[1] - ticks_before[1]) / max(ticks[0] - ticks_before[0], 1),
+        # share of the machine's CPU time other processes (other containers
+        # on the host) kept busy during the run
+        "others_share": (ticks[2] - ticks_before[2]) / max(ticks[0] - ticks_before[0], 1),
         **versions,
         "prep_s": run.prep_s,
         "setup_s": run.setup_s,
         "peak_rss_mb": rss,
         "samples": len(run.samples_ms),
+        "op_geomean_ms": geomean,
         "op_p50_ms": p50,
         "op_p90_ms": p90,
         "beyond_p90": sum(v > p90 for v in run.samples_ms),
@@ -808,11 +837,11 @@ def bench(args) -> int:
     if args.trace:
         values = {k: statistics.median(v) for k, v in run.layer.items()}
         values["trace.overhead_s"] = run.tracer.overhead_s
-        values["trace.op_p50_ms"] = p50
+        values["trace.op_geomean_ms"] = geomean
         values["peak_rss_mb"] = rss
         units = PER_LAYER
     else:
-        values = {"setup_s": run.setup_s, "op_p50_ms": p50}
+        values = {"setup_s": run.setup_s, "op_geomean_ms": geomean}
         units = END_TO_END
     metrics = {k: {"value": float(values.get(k, 0.0)), "unit": u} for k, u in units.items()}
     print(json.dumps({"report": report}), flush=True)
